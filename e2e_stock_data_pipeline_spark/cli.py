@@ -12,7 +12,10 @@ Differences by design:
   end-to-end with a mock transport and no network;
 * writes land as day-partitioned parquet (prices) / gzip NDJSON
   (statement endpoints) plus a JSON run-metrics file — the same layout
-  the reference's two scripts produce.
+  the reference's two scripts produce;
+* the fetched records cross into Spark as one Arrow table, and the
+  prices plan (from_json -> normalize -> keep-last -> write) executes
+  ONCE per run: its ``rows_fetched`` is counted by the write itself.
 """
 
 from __future__ import annotations
@@ -155,8 +158,8 @@ def run(
                 prices = normalize_prices(payload).filter(
                     (F.col("as_of_date") >= from_date) & (F.col("as_of_date") <= to_date)
                 )
-                n = prices.count()
-                write_partitioned_by_day(prices, f"{out}/raw/prices")
+                # one execution: the write counts the rows it lands
+                n = write_partitioned_by_day(prices, f"{out}/raw/prices")
             else:
                 n = df.count()
                 write_ndjson_gz(df, f"{out}/raw/{name}")

@@ -446,7 +446,10 @@ def _arrow_assign_cells(
     native matmul), not algorithmic."""
     import numpy as np
 
-    cents = np.ascontiguousarray(cents, dtype=np.int64)
+    # (0, dim) when there is no candidate (no seed, no refined cell): a
+    # flat empty array has no axis 1 to sum over; there is no row to
+    # assign either, so the result is empty, as in the oracle
+    cents = np.ascontiguousarray(cents, dtype=np.int64).reshape(-1, dim)
     cells_np = np.asarray(cells, dtype=np.int32)
     nc2 = (cents * cents).sum(axis=1)
 

@@ -8,7 +8,7 @@ are dropped, order is fixed (tests/test_ingest_local.py:227-259).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.hashing import canonical_sha256
@@ -71,14 +71,25 @@ def normalize_prices(
     return df.select(*LOCKED_COLUMNS).orderBy("symbol", "as_of_date")
 
 
-def write_partitioned_by_day(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_partitioned_by_day(df: DataFrame, path: str, mode: str = "overwrite") -> int:
     """Day-partitioned parquet layout: dt=YYYY-MM-DD dirs, all symbols per
     day (reference layout ingest_fmp_prices.py:92-105; the group-by-day
-    driver loop :305-330 becomes ONE dynamic partitioned write)."""
+    Python loop :305-330 becomes ONE dynamic partitioned write).
+
+    Returns the number of rows written, counted by an observation on the
+    write itself, so the caller needs no second execution of ``df``. The
+    observation sits on the root of the written plan: when Spark proves
+    the input empty (an empty local relation, or an empty shuffle stage
+    under AQE) it replaces that subtree with an empty relation, and an
+    observation inside the subtree would go with it and report no row.
+    At the root it still reports its count of 0."""
+    written = Observation()
     (
         df.withColumn("dt", F.date_format("as_of_date", "yyyy-MM-dd"))
         .repartition("dt")
+        .observe(written, F.count(F.lit(1)).alias("rows"))
         .write.mode(mode)
         .partitionBy("dt")
         .parquet(path)
     )
+    return written.get["rows"]

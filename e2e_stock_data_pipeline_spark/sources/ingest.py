@@ -2,8 +2,10 @@
 scripts/fmp_dump_raw.py:81-113 ENDPOINTS registry, :120-190 client,
 :197-243 record builder; ingest_fmp_prices.py:124-204 rate-limited
 fetch). Network I/O stays driver-side (it's rate-limited API traffic,
-not Spark's job — SURVEY.md §2.13); everything after the fetch is a
-single Catalyst plan.
+not Spark's job — SURVEY.md §2.13). The fetched records cross into
+Spark as ONE Arrow table (a local relation: no pickled rows, no Python
+workers at execution); everything after the fetch is a single Catalyst
+plan.
 
 The transport is injectable so tests never touch the network, and the
 retry/backoff sleeper is injectable so tests are instant.
@@ -18,9 +20,11 @@ import uuid
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # --------------------------------------------------------------------------
 # Endpoint registry (the "logical plan" of the ingestion tier)
@@ -154,6 +158,7 @@ RECORD_SCHEMA = T.StructType(
         T.StructField("hash", T.StringType(), False),
     ]
 )
+_RECORD_ARROW_SCHEMA = to_arrow_schema(RECORD_SCHEMA)
 
 
 def build_record(
@@ -231,6 +236,14 @@ def ingest_endpoint(
     """Fetch (per-symbol fan-out or market-wide) and build the records
     DataFrame with the fixed NDJSON schema.
 
+    The records reach Spark as one ``pa.Table`` in fetch order: a local
+    relation whose slices keep that order, so
+    ``monotonically_increasing_id`` follows record order whether
+    Catalyst folds it while planning or each slice numbers its own rows —
+    the ordinal keep-last dedup (pipeline/prices.py) relies on it. A
+    list of dicts would instead become a pickled-row scan that starts
+    Python workers on every action.
+
     max_workers > 1 gives the reference's bounded concurrent fan-out
     (asyncio.Semaphore(MAX_WORKERS) + gather, ingest_fmp_prices.py:
     541-550) via a thread pool; the shared RateLimiter still serializes
@@ -254,7 +267,7 @@ def ingest_endpoint(
     else:
         per_symbol = [fetch_one(sym) for sym in targets]
     records = [r for batch in per_symbol for r in batch]
-    return spark.createDataFrame(records, RECORD_SCHEMA)  # type: ignore[arg-type]
+    return spark.createDataFrame(pa.Table.from_pylist(records, schema=_RECORD_ARROW_SCHEMA))
 
 
 def write_ndjson_gz(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -263,8 +276,10 @@ def write_ndjson_gz(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 
 
 def load_tickers(spark: SparkSession, path: str) -> list[str]:
-    """CSV ticker-list scan (S3): uppercase, skip header-ish rows."""
-    rows = spark.read.csv(path, header=False).select(
+    """CSV ticker-list scan (S3): uppercase, skip header-ish rows. The
+    one-column schema is pinned, so the scan is one job (no inference
+    pass over the file)."""
+    rows = spark.read.csv(path, header=False, schema="_c0 STRING").select(
         F.upper(F.trim(F.col("_c0"))).alias("symbol")
     )
     out = [r.symbol for r in rows.collect() if r.symbol and r.symbol not in ("SYMBOL", "TICKER")]

@@ -14,6 +14,7 @@ what the DuckDB oracle sees.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import pyarrow as pa
@@ -45,6 +46,16 @@ _CACHE_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__fil
 
 def path_for(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _cache_dir(sf_dir: str) -> str:
+    """Rewrite-cache directory of one sf dir: ``<basename>/<path hash>``.
+    Entries stay grouped (and removable) by the dataset's basename, and
+    the hash of the resolved absolute path keeps two dirs that share a
+    basename (``a/sf0.1``, ``b/sf0.1``) from answering for each other."""
+    real = os.path.realpath(sf_dir)
+    digest = hashlib.sha256(real.encode()).hexdigest()[:16]
+    return os.path.join(_CACHE_ROOT, os.path.basename(os.path.normpath(sf_dir)), digest)
 
 
 def _leaf_parquet(src: str) -> str:
@@ -184,8 +195,7 @@ def raw_readable_path(sf_dir: str, name: str) -> str:
     src = path_for(sf_dir, name)
     if not _needs_ns_downcast(src):
         return src
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    dst = os.path.join(_CACHE_ROOT, tag, "raw", f"{name}.parquet")
+    dst = os.path.join(_cache_dir(sf_dir), "raw", f"{name}.parquet")
     if os.path.exists(dst) and os.path.getmtime(dst) >= os.path.getmtime(src):
         return dst
     os.makedirs(os.path.dirname(dst), exist_ok=True)
@@ -244,14 +254,14 @@ def spark_readable_path(sf_dir: str, name: str) -> str:
     large single-row-group files re-split into part files so scans
     parallelize. Both rewrites preserve values bit-for-bit vs what DuckDB
     reads (ns->us is the truncation DuckDB applies natively; re-splitting
-    only re-groups rows into files) and happen once per sf dir."""
+    only re-groups rows into files) and happen once per sf dir, cached
+    under :func:`_cache_dir`."""
     src = path_for(sf_dir, name)
     ns = _needs_ns_downcast(src)
     resplit = _resplit_n_files(src)
     if not ns and not resplit:
         return src
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    dst = os.path.join(_CACHE_ROOT, tag, f"{name}.parquet")
+    dst = os.path.join(_cache_dir(sf_dir), f"{name}.parquet")
     if os.path.isdir(src):
         # directory source (partitioned / part-files) needing the ns fix:
         # leaf-wise rewrite preserving the layout (resplit is 0 for dirs)

@@ -1,6 +1,7 @@
 """DuckDB side of the bench comparison: times the SAME headline oracles
-bench.py times Spark-side, on the same parquet dir (threads=32, one
-untimed warmup pass, median of N timed passes). Prints ONE JSON line:
+bench.py times Spark-side, on the same parquet dir (as many DuckDB
+threads as Spark cores: SPARK_GRAFT_CPUS, else the machine's CPU count;
+one untimed warmup pass, median of N timed passes). Prints ONE JSON line:
 
     {"metric": "headline_oracle_total", "value": <sec>, ...}
 
@@ -33,8 +34,9 @@ def main() -> None:
     registry = load_all_query_modules()
     headline = {n: s for n, s in sorted(registry.items()) if s.bench}
 
+    threads = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     con = duckdb.connect()
-    con.execute("SET threads TO 32")
+    con.execute(f"SET threads TO {threads}")
     for t in TABLE_NAMES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
@@ -62,6 +64,7 @@ def main() -> None:
                 "queries": {n: round(statistics.median(ts), 3) for n, ts in samples.items()},
                 "sf_dir": sf_dir,
                 "runs": runs,
+                "threads": threads,
                 "totals": totals,
                 "spread": {"min": min(totals), "max": max(totals)},
             }

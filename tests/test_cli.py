@@ -131,6 +131,11 @@ class TestRunEndToEnd:
         assert payload["tasks_ok"] == 2 and payload["tasks_failed"] == 0
         assert payload["from_date"] == "2026-08-10"
         assert metrics["tasks_ok"] == 2
+        # rows_fetched counts the rows landed: the 4 prices plus 2 income
+        assert metrics["per_endpoint"] == [
+            {"endpoint": "prices", "rows_fetched": 4},
+            {"endpoint": "income", "rows_fetched": 2},
+        ]
 
     def test_failed_endpoint_isolated(self, spark, tickers, tmp_path):
         def broken(url, params):
@@ -153,6 +158,37 @@ class TestRunEndToEnd:
         )
         assert metrics["tasks_ok"] == 1 and metrics["tasks_failed"] == 1
         assert glob.glob(f"{out}/raw/prices/dt=*")  # prices still landed
+
+    @pytest.mark.parametrize(
+        "transport",
+        [
+            pytest.param(lambda url, params: ([], 200), id="empty-response"),
+            # the three valid bars, all outside --from-date/--to-date
+            pytest.param(
+                lambda url, params: (fake_transport(url, params)[0][:3], 200),
+                id="all-out-of-range",
+            ),
+        ],
+    )
+    def test_prices_empty_run_reports_zero_rows(self, spark, tickers, tmp_path, transport):
+        # no row reaches the write: rows_fetched is 0, not a failed endpoint
+        out = str(tmp_path / "raw")
+        metrics = cli.run(
+            [
+                "--tickers-path", tickers,
+                "--output-dir", out,
+                "--endpoints", "prices",
+                "--from-date", "2026-09-01",
+                "--to-date", "2026-09-04",
+            ],
+            spark,
+            transport,
+            today=dt.date(2026, 9, 7),
+        )
+        assert metrics["rows_fetched"] == 0
+        assert metrics["tasks_failed"] == 0 and metrics["tasks_ok"] == 1
+        assert metrics["per_endpoint"] == [{"endpoint": "prices", "rows_fetched": 0}]
+        assert not glob.glob(f"{out}/raw/prices/dt=*")
 
     def test_unknown_endpoint_exits(self, spark, tickers, tmp_path):
         with pytest.raises(SystemExit):

@@ -6,12 +6,14 @@ retry behavior), against the mockable transport.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 
 import pytest
 
 from e2e_stock_data_pipeline_spark.sources.ingest import (
     ENDPOINTS,
+    RECORD_SCHEMA,
     IngestClient,
     RateLimiter,
     build_record,
@@ -156,6 +158,68 @@ class TestIngestEndpoint:
         assert back.count() == 1
         payload = json.loads(back.collect()[0].payload)
         assert payload["revenue"] == 5
+
+
+class TestArrowHandOff:
+    """ingest_endpoint hands its records to Spark as one Arrow table; the
+    frame keeps the record schema and the record order that keep-last
+    dedup relies on."""
+
+    def test_schema_matches_record_schema(self, spark):
+        for payloads in ([{"date": "2024-01-02", "close": 1}], []):
+            client = IngestClient(lambda url, p, b=payloads: (b, 200), sleeper=lambda s: None)
+            df = ingest_endpoint(spark, client, ENDPOINTS["prices"], ["AAPL"], "d", "t")
+            # StructType equality covers names, types and nullability
+            assert df.schema == RECORD_SCHEMA
+            assert df.count() == len(payloads)
+
+    @pytest.mark.parametrize("fold_local", [True, False], ids=["folded", "per-slice"])
+    def test_keep_last_follows_record_order_across_slices(self, spark, fold_local):
+        """Catalyst folds projections over a local relation while planning
+        (ConvertToLocalRelation), where the ordinal is the record index;
+        with that rule off, each slice numbers its own rows. Keep-last
+        must keep the later record either way."""
+        from pyspark.sql import functions as F
+
+        from e2e_stock_data_pipeline_spark.pipeline.prices import normalize_prices
+
+        def bar(day, close):
+            return {"date": day, "open": 1.0, "high": 9.0, "low": 0.5,
+                    "close": close, "volume": 10}
+
+        n_fill = 4 * spark.sparkContext.defaultParallelism
+        # the stale bar is the first record, its correction the last
+        bars = (
+            [bar("2024-06-03", 1.0)]
+            + [bar(str(dt.date(2025, 1, 1) + dt.timedelta(days=i)), 3.0) for i in range(n_fill)]
+            + [bar("2024-06-03", 2.0)]
+        )
+        client = IngestClient(lambda url, p: (bars, 200), sleeper=lambda s: None)
+        df = ingest_endpoint(spark, client, ENDPOINTS["prices"], ["AAPL"], "d",
+                             "2024-06-04T00:00:00")
+        slices = df.rdd.mapPartitionsWithIndex(
+            lambda i, rows: [(i, json.loads(r.payload)["close"]) for r in rows
+                             if json.loads(r.payload)["date"] == "2024-06-03"]
+        ).collect()
+        assert [c for _, c in slices] == [1.0, 2.0]
+        assert slices[0][0] < slices[1][0]  # stale slice before correction slice
+        raw = df.select(
+            "symbol", "request_id", "fetched_at",
+            F.from_json("payload", "date STRING, open STRING, high STRING, low STRING, "
+                        "close STRING, volume STRING").alias("_p"),
+        ).select("symbol", "request_id", "fetched_at", "_p.*")
+        key = "spark.sql.optimizer.excludedRules"
+        prior = spark.conf.get(key, None)
+        if not fold_local:
+            spark.conf.set(key, "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+        try:
+            got = normalize_prices(raw).filter(F.col("as_of_date") == "2024-06-03").collect()
+        finally:
+            if prior is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prior)
+        assert [r.close for r in got] == [2.0]
 
 
 class TestLoadTickers:

@@ -1418,6 +1418,41 @@ class TestDensityScaledGeometry:
             )
             assert arrow == catalyst, kwargs
 
+    def test_ivf_empty_candidates_give_empty_result(self, spark, sf_dir, tmp_path):
+        """No candidate: no seed centroid, no cell to probe, so no row.
+        The arrow path used to crash in numpy on its (0,)-shaped centroid
+        matrix while building the plan; now both paths return the DuckDB
+        oracle's empty result (q128 over an embeddings table holding
+        only its 5 query vectors)."""
+        import duckdb
+
+        from e2e_stock_data_pipeline_spark.operators.similarity import (
+            ivf_rerank_topk_seeded,
+        )
+        from e2e_stock_data_pipeline_spark.plans.registry import load_all_query_modules
+        from e2e_stock_data_pipeline_spark.sources import tables
+
+        e = tables.load(spark, sf_dir, "embeddings")
+        q, c = e.filter(F.col("vec_id") < 5), e.filter(F.col("vec_id") < 0)
+        for kwargs in ({"n_cells": 8, "n_probe": 4}, {"density_scaled": True}):
+            for arrow_assign in (True, False):
+                res = ivf_rerank_topk_seeded(
+                    q, c, k_top=5, arrow_assign=arrow_assign, **kwargs
+                )
+                assert res.collect() == [], (kwargs, arrow_assign)
+
+        sf = tmp_path / "sf_queries_only"
+        sf.mkdir()
+        spec = load_all_query_modules()["q128_ivf_rerank"]
+        with duckdb.connect() as con:
+            con.execute(
+                f"COPY (SELECT * FROM '{tables.path_for(sf_dir, 'embeddings')}' "
+                f"WHERE vec_id < 5) TO '{tables.path_for(str(sf), 'embeddings')}' (FORMAT PARQUET)"
+            )
+            con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'")
+            assert con.execute(spec.oracle).fetchall() == []
+        assert spec.spark(spark, str(sf)).collect() == []
+
     def test_pq_shortlist_div_zero_rejected(self, spark, sf_dir):
         """ADVICE r15: shortlist_scale_div=0 used to silently disable
         the density guard (falsy), diverging from the documented

@@ -164,8 +164,9 @@ def test_no_eager_actions_in_plan_modules():
     #     dimension-sized (<= IVF_CELLS_MAX rows, the exact frames the
     #     lazy path broadcasts), recomputed from parquet every call.
     #     Eager like the iterative operators; licensed by the measured
-    #     sf10 win (50.6 -> see OPTIMIZATION_r18.md) after both exact
-    #     pruning bounds measured dead on this corpus.
+    #     win (sf1, 4 cores: 7.49 -> 2.27 s, see the baseline table in
+    #     ROADMAP.md) after both exact pruning bounds measured dead on
+    #     this corpus.
     allowed_driver_eager = {"similarity.py": 3}
     eager_pat = re.compile(r"\.(count|first|collect|toPandas|head)\(\)")
     offenders = []

@@ -101,7 +101,7 @@ class TestResplitCache:
         )
         tbl = pa.Table.from_pandas(df)  # ns timestamps -> forces a rewrite
         pq.write_table(tbl, os.path.join(sf, "events.parquet"))
-        dst = os.path.join(cache_root, "sf", "events.parquet")
+        dst = os.path.join(tables._cache_dir(sf), "events.parquet")
         os.makedirs(dst, exist_ok=True)
         pq.write_table(tbl.slice(0, 5), os.path.join(dst, "part-00000.parquet"))
         out = tables.spark_readable_path(sf, "events")
@@ -123,3 +123,21 @@ class TestResplitCache:
         assert os.path.getsize(os.path.join(sf, "documents.parquet")) >= tables._RESPLIT_MIN_BYTES
         out = tables.spark_readable_path(sf, "documents")
         assert os.path.isdir(out)
+
+    def test_dirs_sharing_a_basename_get_their_own_cache(self, tmp_path, cache_root):
+        # .../a/sf and .../b/sf: each rewrite holds its own rows, and both
+        # stay under <cache root>/<basename>/ so they can be removed by name
+        n = tables._RESPLIT_WIDTH_MIN_ROWS
+        outs = []
+        for side, offset in (("a", 0), ("b", 10_000)):
+            sf = str(tmp_path / side / "sf")
+            os.makedirs(sf)
+            pd.DataFrame({"k": range(offset, offset + n)}).to_parquet(
+                os.path.join(sf, "lineitem.parquet"), row_group_size=n
+            )
+            outs.append(tables.spark_readable_path(sf, "lineitem"))
+        assert outs[0] != outs[1]
+        for out, offset in zip(outs, (0, 10_000)):
+            assert os.path.dirname(os.path.dirname(out)) == os.path.join(cache_root, "sf")
+            got = sorted(pq.read_table(out).column("k").to_pylist())
+            assert got == list(range(offset, offset + n))
